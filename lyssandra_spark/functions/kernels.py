@@ -449,9 +449,14 @@ def llc(
     constrained least squares  min ||x - B w||^2 s.t. 1^T w = 1  in closed
     form: C = (B - x 1^T)^T (B - x 1^T); solve (C + beta*tr(C)*I) w = 1;
     w /= sum(w). Scatter w into the sparse code. Columns processed in
-    cache-sized chunks (per-sample independent => chunk-invariant).
+    cache-sized chunks: per-sample independent, so the result depends
+    on ``block`` only up to ulps (BLAS GEMM blocking changes with the
+    chunk width, and near-duplicate atoms in a support amplify those
+    ulps through the barely-regularized solve).
 
-    knn selection determinism: stable argsort => lowest atom index wins ties.
+    knn selection determinism: repeated masked argmin => lowest atom
+    index wins exact ties; the distances behind near-ties agree across
+    block sizes up to ulps.
     """
     D = np.asarray(D, dtype=np.float64)
     X = np.atleast_2d(np.asarray(X, dtype=np.float64))

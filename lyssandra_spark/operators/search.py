@@ -531,25 +531,13 @@ def hybrid_search_indexed(
     <ann>_topk_indexed(...)], ...)`` — pytest-pinned, so anything
     proven about the parts (bit-parity with per-call operators,
     no-corpus-scan plans) transfers to the whole."""
-    from lyssandra_spark.operators import ann_index as _ai
+    from lyssandra_spark.operators.ann_index import _serve_for
 
-    serves = {
-        "ivf": (_ai.ivf_topk_indexed, "ivf_spec"),
-        "pq": (_ai.pq_topk_indexed, "pq_spec"),
-        "ivfpq": (_ai.ivfpq_topk_indexed, "ivfpq_spec"),
-    }
-    if ann_method not in serves:
-        raise ValueError(
-            f"ann_method {ann_method!r} — pick one of {sorted(serves)}"
-        )
-    serve, spec_key = serves[ann_method]
+    serve, spec = _serve_for(catalog, ann_table, ann_method, "ann_method")
     lex = bm25_topk_indexed(
         catalog, postings_table, queries.select(qid_col, qtext_col),
         k=k, qid_col=qid_col, qtext_col=qtext_col,
         **(bm25_kwargs or {}),
-    )
-    spec = (catalog.latest_meta(ann_table, spec_key) or {}).get(
-        spec_key, {}
     )
     ann_id = spec.get("id_col", "vec_id")
     ann_emb = spec.get("emb_col", "embedding")

@@ -16,6 +16,7 @@ from lyssandra_spark.operators.ann_index import (
     ivf_topk_indexed,
     pq_topk_indexed,
     refresh_ivf_index,
+    refresh_ivfpq_index,
     refresh_pq_index,
 )
 from lyssandra_spark.sources.catalog import ParquetCatalog
@@ -256,8 +257,8 @@ def test_ann_index_survives_audit_compaction(spark, emb, tmp_path):
     """compact()+expire() of already-indexed source snapshots must not
     retrain or reassign: the refresh is watermark-only (append), the
     frozen centroids/codebooks survive, and a later delta still folds
-    incrementally. Covers both IVF and PQ (shared chain-state path,
-    separate delta-None branches)."""
+    incrementally. Covers IVF, PQ and IVF-PQ (one shared lifecycle,
+    three codecs)."""
     ranked = _hash_ranked_ids(emb)
     b1a = emb.where(F.col("vec_id").isin(ranked[:150]))
     b1b = emb.where(F.col("vec_id").isin(ranked[150:250]))
@@ -267,14 +268,19 @@ def test_ann_index_survives_audit_compaction(spark, emb, tmp_path):
     # different row population than the frozen bootstrap artifacts
     ivf_kw = dict(n_cells=8, sample_rows=64, seed=23, refine_iters=0)
     pq_kw = dict(m=8, n_codes=16, sample_rows=64, seed=29, refine_iters=0)
+    ivfpq_kw = dict(n_cells=8, m=8, n_codes=16, sample_rows=64, seed=31,
+                    refine_iters=0)
 
     cat = ParquetCatalog(spark, str(tmp_path))
     cat.write(b1a, "vecs", mode="overwrite")
     cat.write(b1b, "vecs", mode="append")  # a real chain, so compact() rewrites
     s1 = refresh_ivf_index(cat, "vecs", "ivf", **ivf_kw)
     refresh_pq_index(cat, "vecs", "pq", **pq_kw)
+    refresh_ivfpq_index(cat, "vecs", "ivfpq", **ivfpq_kw)
     c_before = cat.latest_meta("ivf", "centroids")["centroids"]
     books_before = cat.latest_meta("pq", "codebooks")["codebooks"]
+    hc_before = cat.latest_meta("ivfpq", "centroids")["centroids"]
+    hbooks_before = cat.latest_meta("ivfpq", "ivfpq_books")["ivfpq_books"]
 
     cat.compact("vecs")
     cat.expire("vecs")
@@ -283,19 +289,28 @@ def test_ann_index_survives_audit_compaction(spark, emb, tmp_path):
     assert cat.snapshots("ivf")[-1]["mode"] == "append"  # no rebuild
     refresh_pq_index(cat, "vecs", "pq", **pq_kw)
     assert cat.snapshots("pq")[-1]["mode"] == "append"
+    refresh_ivfpq_index(cat, "vecs", "ivfpq", **ivfpq_kw)
+    assert cat.snapshots("ivfpq")[-1]["mode"] == "append"
     assert cat.read("ivf").count() == 250
     assert cat.read("pq").count() == 250
+    assert cat.read("ivfpq").count() == 250
 
     # post-compaction delta folds under the FROZEN artifacts
     cat.write(b2, "vecs", mode="append")
     refresh_ivf_index(cat, "vecs", "ivf", **ivf_kw)
     refresh_pq_index(cat, "vecs", "pq", **pq_kw)
+    refresh_ivfpq_index(cat, "vecs", "ivfpq", **ivfpq_kw)
     assert cat.snapshots("ivf")[-1]["mode"] == "append"
     assert cat.snapshots("pq")[-1]["mode"] == "append"
+    assert cat.snapshots("ivfpq")[-1]["mode"] == "append"
     assert cat.latest_meta("ivf", "centroids")["centroids"] == c_before
     assert cat.latest_meta("pq", "codebooks")["codebooks"] == books_before
+    assert cat.latest_meta("ivfpq", "centroids")["centroids"] == hc_before
+    assert (cat.latest_meta("ivfpq", "ivfpq_books")["ivfpq_books"]
+            == hbooks_before)
     assert cat.read("ivf").count() == 500
     assert cat.read("pq").count() == 500
+    assert cat.read("ivfpq").count() == 500
 
     # and the index still equals a one-shot rebuild over the full corpus
     cat.write(emb, "vecs_full", mode="overwrite")
@@ -532,7 +547,7 @@ def test_force_rebuild_acts_on_drift_signal(spark, tmp_path):
     """The needs_retrain -> force_rebuild loop: after a drifted batch
     flips the signal, refresh(force_rebuild=True) retrains over the
     FULL chain in place (source untouched), resets the drift baseline,
-    and the signal clears. Covers IVF and PQ."""
+    and the signal clears. Covers IVF, PQ and IVF-PQ."""
     from lyssandra_spark.operators.ann_index import needs_retrain
 
     rng = np.random.default_rng(17)
@@ -548,9 +563,11 @@ def test_force_rebuild_acts_on_drift_signal(spark, tmp_path):
         )
 
     for kind, refresh in (("ivf", refresh_ivf_index),
-                          ("pq", refresh_pq_index)):
+                          ("pq", refresh_pq_index),
+                          ("ivfpq", refresh_ivfpq_index)):
         kw = dict(sample_rows=128)
-        kw.update({"ivf": dict(n_cells=4), "pq": dict(m=4, n_codes=16)}[kind])
+        kw.update({"ivf": dict(n_cells=4), "pq": dict(m=4, n_codes=16),
+                   "ivfpq": dict(n_cells=4, m=4, n_codes=16)}[kind])
         cat = ParquetCatalog(spark, str(tmp_path / kind))
         cat.write(_df(base, 0), "vecs", mode="overwrite")
         refresh(cat, "vecs", "idx", **kw)
@@ -911,3 +928,81 @@ def test_ivf_indexed_no_broadcast_path_matches(spark, emb, tmp_path):
                                  broadcast_queries=False)),
         _sorted(ivf_topk_indexed(cat, "ivf", q, k=5, nprobe=4)),
     )
+
+
+# --------------------------------------- one lifecycle, three codecs
+
+_KINDS = {
+    "ivf": (refresh_ivf_index, dict(n_cells=2)),
+    "pq": (refresh_pq_index, dict(m=2, n_codes=4)),
+    "ivfpq": (refresh_ivfpq_index, dict(n_cells=2, m=2, n_codes=4)),
+}
+
+
+def _small_corpus(spark):
+    """40 random 4-wide vectors."""
+    rng = np.random.default_rng(11)
+    return spark.createDataFrame(
+        [(i, [float(v) for v in rng.normal(size=4)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+def test_refresh_rejects_null_and_wrong_width_vectors(spark, tmp_path, kind):
+    """A delta carrying a vector whose width differs from the frozen
+    artifacts', an empty vector, or a null vector fails the refresh
+    with ONE clear ValueError for every index kind — not IVF silently
+    null-padding the short vector into cell 0, nor PQ / IVF-PQ failing
+    with an opaque numpy reshape/matmul error — and writes nothing.
+    drift_metrics=False, so the drift pass's own guard cannot be what
+    catches it."""
+    refresh, kw = _KINDS[kind]
+    kw = dict(kw, sample_rows=32, refine_iters=0, drift_metrics=False)
+    cat = ParquetCatalog(spark, str(tmp_path))
+    bad_batches = {
+        "wide_and_empty": spark.createDataFrame(
+            [(100, [1.0] * 8), (101, [])],
+            "vec_id long, embedding array<double>",
+        ),
+        "null": spark.createDataFrame(
+            [(200, None), (201, [1.0, 2.0, 3.0, 4.0])],
+            "vec_id long, embedding array<double>",
+        ),
+    }
+    for name, bad in bad_batches.items():
+        cat.write(_small_corpus(spark), name, mode="overwrite")
+        sid = refresh(cat, name, f"idx_{name}", **kw)
+        cat.write(bad, name, mode="append")
+        with pytest.raises(ValueError, match="non-null and 4 wide"):
+            refresh(cat, name, f"idx_{name}", **kw)
+        assert cat.snapshots(f"idx_{name}")[-1]["id"] == sid, name
+        assert cat.read(f"idx_{name}").count() == 40, name
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+def test_refresh_spec_mismatch_needs_force_rebuild(spark, tmp_path, kind):
+    """Refreshing an existing index under a changed spec raises a
+    ValueError naming force_rebuild (artifact generations never mix);
+    the same call with force_rebuild=True retrains in place — one
+    overwrite snapshot carrying the new spec — and later refreshes
+    under the new spec need no force."""
+    refresh, kw = _KINDS[kind]
+    kw = dict(kw, sample_rows=32, refine_iters=0)
+    cat = ParquetCatalog(spark, str(tmp_path))
+    cat.write(_small_corpus(spark), "vecs", mode="overwrite")
+    refresh(cat, "vecs", "idx", seed=5, **kw)
+    n_snaps = len(cat.snapshots("idx"))
+
+    with pytest.raises(ValueError, match="force_rebuild"):
+        refresh(cat, "vecs", "idx", seed=6, **kw)
+    assert len(cat.snapshots("idx")) == n_snaps
+
+    sid = refresh(cat, "vecs", "idx", seed=6, force_rebuild=True, **kw)
+    snaps = cat.snapshots("idx")
+    assert len(snaps) == n_snaps + 1
+    assert snaps[-1]["id"] == sid and snaps[-1]["mode"] == "overwrite"
+    key = f"{kind}_spec"
+    assert cat.latest_meta("idx", key)[key]["seed"] == 6
+    assert cat.read("idx").count() == 40
+    assert refresh(cat, "vecs", "idx", seed=6, **kw) == sid  # no-op

@@ -359,3 +359,44 @@ def test_pq_topk_empty_corpus_raises(spark):
     )
     with pytest.raises(ValueError, match="non-empty corpus"):
         S.pq_topk(empty, q, k=5)
+
+
+def test_segment_accumulate_empty_assignment_is_a_noop():
+    """An empty assignment (a partition whose batches all filtered
+    away) adds nothing instead of raising from ``add.reduceat``; a
+    non-empty one matches the ``np.add.at`` scatter."""
+    from lyssandra_spark.operators.similarity import _segment_accumulate
+
+    sums, counts = np.ones((3, 2)), np.arange(3)
+    _segment_accumulate(sums, counts, np.empty(0, dtype=np.int64),
+                        np.empty((0, 2)))
+    assert (sums == 1.0).all() and counts.tolist() == [0, 1, 2]
+
+    rng = np.random.default_rng(0)
+    a, X = rng.integers(0, 3, size=50), rng.normal(size=(50, 2))
+    want_s, want_c = np.zeros((3, 2)), np.zeros(3, dtype=np.int64)
+    np.add.at(want_s, a, X)
+    np.add.at(want_c, a, 1)
+    got_s, got_c = np.zeros((3, 2)), np.zeros(3, dtype=np.int64)
+    _segment_accumulate(got_s, got_c, a, X)
+    np.testing.assert_allclose(got_s, want_s, rtol=1e-12)
+    assert got_c.tolist() == want_c.tolist()
+
+
+def test_nearest_cells_matches_stable_argsort():
+    """The one probe-selection helper (cell assignment and IVF-PQ
+    probing, driver and Arrow pass alike) selects exactly a stable
+    ascending argsort's first p cells on finite rows — exact ties
+    included, which resolve to the lower cell id."""
+    from lyssandra_spark.operators.similarity import _nearest_cells
+
+    rng = np.random.default_rng(4)
+    C = rng.normal(size=(9, 6))
+    C[5] = C[2]  # duplicated centroid: every row ties cells 2 and 5
+    X = rng.normal(size=(40, 6))
+    d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
+    for p in (1, 3, 9):
+        want = np.argsort(d2, axis=1, kind="stable")[:, :p]
+        got = _nearest_cells(X, C, p)
+        assert got.dtype == np.int32 and got.shape == (40, p)
+        assert (got == want).all(), p

@@ -725,8 +725,12 @@ def minhash_signatures(
     return src.mapInArrow(gen, out_schema)
 
 
-def _cap_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None) -> DataFrame:
-    """Drop rows in candidate buckets larger than ``max_bucket``.
+def _cap_buckets(
+    banded: DataFrame, keys: list[str], max_bucket: int | None,
+    old: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Drop rows in candidate buckets larger than ``max_bucket``; returns
+    ``(banded, old)`` capped.
 
     The quadratic LSH pathology: B identical/boilerplate docs share every
     bucket, so candidate generation emits B*(B-1)/2 pairs — at B=100k
@@ -737,22 +741,85 @@ def _cap_buckets(banded: DataFrame, keys: list[str], max_bucket: int | None) -> 
     buckets, templated near-dups that share a hot band/chunk value can
     also exceed the cap — those pairs are silently skipped. Use the cap
     to bound worst-case cost, not when completeness is the contract.
-    The size count rides the same (bucket-key) partitioning the
-    self-join needs — no extra exchange. Default (None) is uncapped:
-    exact parity with the historical output.
+    With an ``old`` (already-indexed) side the size is the COMBINED
+    population of both sides, never per side. The size count rides the
+    same (bucket-key) partitioning the self-join needs — no extra
+    exchange. Default (None) is uncapped: exact parity with the
+    historical output.
     """
     if max_bucket is None:
-        return banded
-    if max_bucket < 2:
-        raise ValueError(f"max_bucket ({max_bucket}) must be >= 2")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys)
-    return (
-        banded.withColumn("__bsz", F.count("*").over(w))
+        return banded, old
+    _check_cap(max_bucket)
+    pop = banded if old is None else (
+        banded.withColumn("__old", F.lit(False))
+        .unionByName(old.withColumn("__old", F.lit(True)))
+    )
+    pop = (
+        pop.withColumn("__bsz", F.count("*").over(Window.partitionBy(*keys)))
         .where(F.col("__bsz") <= max_bucket)
         .drop("__bsz")
     )
+    if old is None:
+        return pop, None
+    return (pop.where(~F.col("__old")).drop("__old"),
+            pop.where(F.col("__old")).drop("__old"))
+
+
+def _check_cap(max_bucket: int | None) -> None:
+    if max_bucket is not None and max_bucket < 2:
+        raise ValueError(f"max_bucket ({max_bucket}) must be >= 2")
+
+
+def _bucket_pairs(
+    banded: DataFrame, keys: list[str], id_col: str,
+    max_bucket: int | None, old: DataFrame | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The candidate step of every LSH pair generator: (id_a, id_b)
+    pairs, id_a < id_b, sharing a bucket ``keys`` value, deduped.
+
+    ``banded`` is self-joined inside buckets (never all-pairs); with an
+    ``old`` (already-indexed) side it is also joined new-vs-indexed, so
+    a batch emits every pair with at least one end in it. Both sides are
+    capped by :func:`_cap_buckets` first. ``carry`` names per-row columns
+    that ride along as ``<c>_a`` / ``<c>_b`` in the canonical id order
+    (e.g. the simhash, verified in-join); everything else is re-joined
+    for surviving pairs only (:func:`_rejoin`), so the bucket exchanges
+    stay (id, keys) narrow."""
+    banded, old = _cap_buckets(banded, keys, max_bucket, old)
+
+    def pair(other: DataFrame, ordered: bool) -> DataFrame:
+        a, b = banded.alias("a"), other.alias("b")
+        ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+        cond = ida < idb if ordered else ida != idb
+        for k in keys:
+            cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+        cols = []
+        for c, name in [(id_col, "id")] + [(c, c) for c in carry]:
+            lo, hi = F.col(f"a.{c}"), F.col(f"b.{c}")
+            if not ordered:  # disjoint sides: canonicalize the order
+                lo, hi = (F.when(ida < idb, lo).otherwise(hi),
+                          F.when(ida < idb, hi).otherwise(lo))
+            cols += [lo.alias(f"{name}_a"), hi.alias(f"{name}_b")]
+        return a.join(b, cond).select(*cols)
+
+    cand = pair(banded, ordered=True)
+    if old is not None:
+        cand = cand.unionByName(pair(old, ordered=False))
+    return cand.dropDuplicates(["id_a", "id_b"])
+
+
+def _rejoin(cand: DataFrame, lookup: DataFrame, id_col: str,
+            col: str) -> DataFrame:
+    """Attach ``lookup[col]`` to both ends of each (id_a, id_b) candidate
+    as ``<col>_a`` / ``<col>_b`` — the verification re-join."""
+    for s in ("a", "b"):
+        cand = cand.join(
+            lookup.select(F.col(id_col).alias(f"id_{s}"),
+                          F.col(col).alias(f"{col}_{s}")),
+            f"id_{s}",
+        )
+    return cand
 
 
 def band_signatures(
@@ -818,29 +885,17 @@ def minhash_lsh_pairs(
     # purely to feed the hash; equal slices hash equal either way (so true
     # candidates are identical) and 2^-64 cross-band collisions are noise
     # under the est_jaccard>=threshold verification.
-    banded = band_signatures(sigs, id_col, n_perm, bands)
-    banded = _cap_buckets(banded, ["band", "bh"], max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .join(sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a")),
-              "id_a")
-        .join(sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b")),
-              "id_b")
-    )
+    cand = _bucket_pairs(band_signatures(sigs, id_col, n_perm, bands),
+                         ["band", "bh"], id_col, max_bucket)
+    return _jaccard_pairs(cand, sigs, id_col, n_perm, threshold)
+
+
+def _jaccard_pairs(cand: DataFrame, sigs: DataFrame, id_col: str,
+                   n_perm: int, threshold: float) -> DataFrame:
+    """MinHash verification: re-join signatures, keep est >= threshold."""
     return (
-        cand.withColumn("est_jaccard", est_jaccard(n_perm))
+        _rejoin(cand, sigs, id_col, "sig")
+        .withColumn("est_jaccard", est_jaccard(n_perm))
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -1025,25 +1080,16 @@ def simhash_pairs_from_hashes(
     :func:`_cap_buckets` — pairs colliding only in a dropped bucket are
     skipped). Output: (id_a, id_b, hamming) with id_a < id_b.
     """
-    banded = simhash_bands(sh, id_col, hash_col, max_hamming)
-    banded = _cap_buckets(banded, ["ci", "cv"], max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .where(ham <= max_hamming)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _bucket_pairs(simhash_bands(sh, id_col, hash_col, max_hamming),
+                         ["ci", "cv"], id_col, max_bucket, carry=("simhash",))
+    return _hamming_pairs(cand, max_hamming)
+
+
+def _hamming_pairs(cand: DataFrame, max_hamming: int) -> DataFrame:
+    """SimHash verification on the carried hashes: bit_count(xor)."""
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return cand.select("id_a", "id_b", ham.alias("hamming")).where(
+        F.col("hamming") <= max_hamming
     )
 
 
@@ -1071,52 +1117,46 @@ def embedding_neardup_pairs(
     Scale shape: candidate generation explodes ONLY (id, table, bucket) —
     the 8*dim-byte embeddings are re-joined for surviving deduped pairs,
     exactly like minhash_lsh_pairs' slim-shuffle fix — and exact cosine
-    verification of candidates is JVM-side.
+    verification of candidates is JVM-side. A vector whose width !=
+    ``dim`` fails the job ("width != dim") on both bucket paths.
     """
     from lyssandra_spark.operators.similarity import hyperplane_buckets
 
     if n_tables < 1:
         raise ValueError(f"n_tables ({n_tables}) must be >= 1")
-    rng = np.random.default_rng(seed)
-    e = df.select(
-        F.col(id_col), F.col(emb_col).cast("array<double>").alias("emb")
-    )
+    e = _checked_embeddings(df, id_col, emb_col, dim)
     # sign-sketch buckets for all tables in ONE scan (keep only the id:
     # candidate generation never ships embeddings); stacked draw == the
     # per-table sequential draws, so buckets match the historical shape
-    planes = rng.standard_normal((n_tables, n_planes, dim))
+    planes = np.random.default_rng(seed).standard_normal((n_tables, n_planes, dim))
     tagged = hyperplane_buckets(e, planes, "emb", keep=[id_col])
-    tagged = _cap_buckets(tagged, ["tbl", "bucket"], max_bucket)
-    a = tagged.alias("a")
-    b = tagged.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .join(e.select(F.col(id_col).alias("id_a"), F.col("emb").alias("emb_a")),
-              "id_a")
-        .join(e.select(F.col(id_col).alias("id_b"), F.col("emb").alias("emb_b")),
-              "id_b")
+    cand = _bucket_pairs(tagged, ["tbl", "bucket"], id_col, max_bucket)
+    return _cosine_pairs(cand, e, id_col, min_cosine)
+
+
+def _checked_embeddings(df: DataFrame, id_col: str, emb_col: str,
+                        dim: int) -> DataFrame:
+    """(id, emb) with ``emb`` cast to array<double> and its width checked
+    in-plan: a vector whose length != ``dim`` would null-pad zip_with on
+    the expression bucket path (the NULL dot folds to bit 0 — silently
+    degraded recall) and break the Arrow GEMM, so the job fails with
+    "width != dim" instead. ``assert_true`` rides ON the emb column, so
+    column pruning can never drop the check, and it costs no extra job."""
+    emb = F.col(emb_col).cast("array<double>")
+    ok = F.assert_true(
+        F.size(emb) == dim,
+        F.concat(F.lit(f"embedding width != dim ({dim}) for {id_col}="),
+                 F.col(id_col).cast("string")),
     )
-    dotp = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return (
-        cand.select(
-            "id_a", "id_b",
-            (dotp / (nrm("emb_a") * nrm("emb_b"))).alias("cosine"),
-        )
-        .where(F.col("cosine") >= min_cosine)
-    )
+    return df.select(id_col, F.when(ok.isNull(), emb).alias("emb"))
+
+
+def _cosine_pairs(cand: DataFrame, embs: DataFrame, id_col: str,
+                  min_cosine: float) -> DataFrame:
+    """Exact cosine verification: re-join (id, emb), keep >= min_cosine."""
+    from lyssandra_spark.operators.similarity import _dot, _norm
+
+    a, b = F.col("emb_a"), F.col("emb_b")
+    return _rejoin(cand, embs, id_col, "emb").select(
+        "id_a", "id_b", (_dot(a, b) / (_norm(a) * _norm(b))).alias("cosine"),
+    ).where(F.col("cosine") >= min_cosine)

@@ -1,41 +1,75 @@
 """Incremental near-duplicate detection over a persisted signature index.
 
-A production training-data pipeline does NOT recompute 100 TB of minhash
+A production training-data pipeline does NOT recompute 100 TB of
 signatures every day: the daily job dedups a NEW shard against the
-already-indexed corpus. This module composes the signature operators
-(:mod:`~lyssandra_spark.operators.dedup`) with the snapshot catalog
-(:mod:`~lyssandra_spark.sources.catalog`):
+already-indexed corpus. This module composes the three LSH pair
+families of :mod:`~lyssandra_spark.operators.dedup` — MinHash
+(:func:`dedup_new_batch`), SimHash (:func:`simhash_new_batch`) and
+hyperplane embedding-LSH (:func:`embneardup_new_batch`) — with the
+snapshot catalog (:mod:`~lyssandra_spark.sources.catalog`):
 
-- the index is ONE catalog table of ``(doc_id, sig)`` rows — band bucket
-  keys are a pure-JVM projection of the signature
-  (:func:`~lyssandra_spark.operators.dedup.band_signatures`), so they are
-  derived on read instead of persisted ``bands``-times over;
-- each batch computes signatures ONLY for the new shard (one vectorized
-  mapInArrow pass), appends them as a new catalog snapshot, and
-  bucket-joins the new shard's bands against the indexed bands
-  (new-vs-indexed) plus itself (new-vs-new). The indexed corpus never
+- the index is ONE catalog table of per-doc signatures (``(id, sig)``,
+  ``(id, simhash)`` or ``(id, emb, buckets)``). Bucket keys are a
+  pure-JVM projection of the stored signature, so they are derived on
+  read instead of persisted once per band/chunk/table;
+- every generator runs the same batch lifecycle (``_signed_batch``) and
+  keeps only its own parts: the params key, the sign function, the
+  banding and the verification. The lifecycle validates the params
+  against the chain head, then either replays a retried batch or runs
+  dropDuplicates(id) -> anti-join against the prior snapshot -> sign
+  (one vectorized pass over the NEW shard only) -> append with the
+  params in the manifest meta. Candidates come from the one-shot
+  generators' candidate step
+  (:func:`~lyssandra_spark.operators.dedup._bucket_pairs`): new-vs-new
+  plus new-vs-indexed bucket joins over the persisted snapshots, with
+  the combined-population ``max_bucket`` cap. The indexed corpus never
   crosses Python again and its text is never re-read;
-- the incremental invariant (pinned in ``tests/test_dedup.py``): the
-  UNION of every batch's returned pairs equals
-  :func:`~lyssandra_spark.operators.dedup.minhash_lsh_pairs` run once over
+- the incremental invariant (pinned in the tests): the UNION of every
+  batch's returned pairs equals the one-shot generator run once over
   the full corpus. It holds because signatures are deterministic in
-  (n_perm, ngram_bytes, seed) and every unordered pair {a, b} is emitted
-  exactly once — by whichever batch indexed the LATER of the two docs.
+  their params and every unordered pair {a, b} is emitted exactly
+  once — by whichever batch indexed the LATER of the two docs.
 
-LSH parameters are part of the index's identity: they are recorded in the
-snapshot manifest ``meta`` on every write and validated against the chain
-head on every subsequent batch — mixing signature spaces would silently
-produce buckets that never collide.
+Parameters that define the signature space are the index's identity:
+they are recorded in the snapshot manifest ``meta`` on every write and
+validated (exact match) against the newest snapshot carrying them on
+every subsequent batch — mixing signature spaces would silently produce
+buckets that never collide.
+
+**Retry safety** (all three generators): the signature append is EAGER
+but the returned ``pairs`` plan is lazy — a job that dies between the
+two leaves the index holding this batch's signatures. Pass a stable
+``batch_id`` (e.g. the orchestrator's run date) and a retried call
+finds the half-done snapshot by its stamped id, SKIPS the re-append,
+and pairs against the chain as it stood before it — byte-identical
+output to a first-attempt success instead of a permanently doubled
+signature set.
+
+**Re-ingest safety**: ids already in the index (and duplicate ids
+within the batch) are dropped before signing — the id IS the
+document's identity, so re-feeding an indexed doc is a no-op, never a
+second signature row silently fanning out every future batch's
+verification join. A genuinely REVISED document under an old id needs
+an index rebuild (or a new id): the anti-join keeps the original
+signature by design.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lyssandra_spark.operators.dedup import (
+    _bucket_pairs,
+    _check_cap,
+    _checked_embeddings,
+    _cosine_pairs,
+    _hamming_pairs,
+    _jaccard_pairs,
     band_signatures,
-    est_jaccard,
     minhash_signatures,
     simhash,
     simhash_bands,
@@ -62,10 +96,9 @@ def _index_batch_state(catalog, table: str, prior: list, params: dict,
     identity (e.g. ``text_col``/``emb_col``, added in round 8) fails
     validation on the next batch rather than silently grandfathering a
     column space nobody recorded; the remedy is a rebuild, as the
-    error says; a
-    stamped ``batch_id`` makes a retried batch find its half-done
-    snapshot instead of appending twice (see :func:`dedup_new_batch`'s
-    retry-safety contract, which all three generators share)."""
+    error says; a stamped ``batch_id`` makes a retried batch find its
+    half-done snapshot instead of appending twice (the module
+    docstring's retry-safety contract)."""
     if prior:
         head = (catalog.latest_meta(table, params_key) or {}).get(params_key)
         if head != params:
@@ -87,6 +120,50 @@ def _index_batch_state(catalog, table: str, prior: list, params: dict,
     snap_id = hits[0]["id"]
     before = [s for s in prior if s["id"] < snap_id]
     return hits[0], (before[-1]["id"] if before else None)
+
+
+def _signed_batch(
+    catalog, table: str, new_rows: DataFrame, id_col: str,
+    params_key: str, params: dict, batch_id: str | None,
+    sign: Callable[[DataFrame], DataFrame],
+    band: Callable[[DataFrame], DataFrame],
+    keys: list[str], max_bucket: int | None, carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, int]:
+    """The batch lifecycle of the three signature-index generators (see
+    the module docstring): validate, replay or dedup -> anti-join ->
+    ``sign`` -> append, then candidate pairs of the persisted new
+    snapshot (new-vs-new) and the chain before it (new-vs-indexed), both
+    ``band``-ed on read. Returns ``(candidates, snapshot_id)``."""
+    _check_cap(max_bucket)  # before the append: a bad cap writes nothing
+    prior = catalog.snapshots(table)
+    # newest snapshot CARRYING the params (a compact() of the index
+    # interposes an audit-only snapshot; the identity must survive)
+    replay, prior_as_of = _index_batch_state(
+        catalog, table, prior, params, params_key, batch_id
+    )
+    if replay is not None:
+        snap_id = replay["id"]
+    else:
+        prior_as_of = prior[-1]["id"] if prior else None
+        batch = new_rows.dropDuplicates([id_col])
+        if prior_as_of is not None:
+            indexed_ids = catalog.read(table, as_of=prior_as_of).select(id_col)
+            batch = batch.join(indexed_ids, id_col, "left_anti")
+        meta = {params_key: params}
+        if batch_id is not None:
+            meta["batch_id"] = batch_id
+        snap_id = catalog.write(
+            sign(batch), table, mode="append" if prior else "overwrite",
+            meta=meta,
+        )
+    # both join sides read what was just persisted — the sign pass runs
+    # exactly once per document, ever
+    banded_new = band(catalog.read_snapshot(table, snap_id))
+    banded_old = None
+    if prior_as_of is not None:
+        banded_old = band(catalog.read(table, as_of=prior_as_of))
+    return _bucket_pairs(banded_new, keys, id_col, max_bucket,
+                         old=banded_old, carry=carry), snap_id
 
 
 def dedup_new_batch(
@@ -121,23 +198,8 @@ def dedup_new_batch(
     ``max_bucket`` (optional) drops candidate buckets whose COMBINED
     (indexed + new) size exceeds the cap — same recall trade-off as
     :func:`~lyssandra_spark.operators.dedup._cap_buckets`, measured on
-    the true bucket population rather than per side.
-
-    **Retry safety**: the signature append is EAGER but the returned
-    ``pairs`` plan is lazy — a job that dies between the two leaves the
-    index holding this batch's signatures. Pass a stable ``batch_id``
-    (e.g. the orchestrator's run date) and a retried call finds the
-    half-done snapshot by its stamped id, SKIPS the re-append, and pairs
-    against the chain as it stood before it — byte-identical output to a
-    first-attempt success instead of a permanently doubled signature set.
-
-    **Re-ingest safety**: doc ids already in the index (and duplicate
-    ids within the batch) are dropped before signing — the id IS the
-    document's identity, so re-feeding an indexed doc is a no-op, never
-    a second signature row silently fanning out every future batch's
-    verification join. A genuinely REVISED text under an old id needs an
-    index rebuild (or a new id): the anti-join keeps the original
-    signature by design.
+    the true bucket population rather than per side. ``batch_id`` retry
+    and re-ingest semantics: see the module docstring.
     """
     if n_perm % bands != 0:
         raise ValueError(f"n_perm ({n_perm}) must be divisible by bands ({bands})")
@@ -149,98 +211,16 @@ def dedup_new_batch(
         "ngram_bytes": ngram_bytes, "seed": seed, "id_col": id_col,
         "text_col": text_col,
     }
-    prior = catalog.snapshots(table)
-    # newest snapshot CARRYING the params (a compact() of the index
-    # interposes an audit-only snapshot; the identity must survive)
-    replay, replay_as_of = _index_batch_state(
-        catalog, table, prior, params, "lsh_params", batch_id
+    cand, snap_id = _signed_batch(
+        catalog, table, new_docs, id_col, "lsh_params", params, batch_id,
+        sign=lambda b: minhash_signatures(b, id_col, text_col, n_perm,
+                                          ngram_bytes, seed),
+        band=lambda s: band_signatures(s, id_col, n_perm, bands),
+        keys=["band", "bh"], max_bucket=max_bucket,
     )
-
-    if replay is not None:
-        # retried batch: its signatures are already indexed — skip the
-        # append and pair against the chain as it stood just before it
-        snap_id = replay["id"]
-        prior_as_of = replay_as_of
-    else:
-        prior_as_of = prior[-1]["id"] if prior else None
-        # doc identity is the id: a re-ingested id (within the batch OR
-        # already in the index) must not append a second signature row —
-        # duplicated signatures fan out the verification join and emit
-        # conflicting pairs in every future batch. Within-batch dups
-        # collapse arbitrarily (ids are expected unique per doc);
-        # already-indexed ids are anti-joined out, so re-feeding
-        # yesterday's docs is a no-op rather than a slow corruption.
-        batch = new_docs.dropDuplicates([id_col])
-        if prior_as_of is not None:
-            indexed_ids = catalog.read(table, as_of=prior_as_of).select(id_col)
-            batch = batch.join(indexed_ids, id_col, "left_anti")
-        sigs_new = minhash_signatures(
-            batch, id_col, text_col, n_perm, ngram_bytes, seed
-        )
-        meta = {"lsh_params": params}
-        if batch_id is not None:
-            meta["batch_id"] = batch_id
-        snap_id = catalog.write(
-            sigs_new, table, mode="append" if prior else "overwrite", meta=meta,
-        )
-    # both join sides read what was just persisted — the mapInArrow
-    # signature pass runs exactly once per document, ever
-    new = catalog.read_snapshot(table, snap_id)
-    banded_new = band_signatures(new, id_col, n_perm, bands)
-    banded_old = None
-    if prior_as_of is not None:
-        old = catalog.read(table, as_of=prior_as_of)
-        banded_old = band_signatures(old, id_col, n_perm, bands)
-
-    if max_bucket is not None:
-        if max_bucket < 2:
-            raise ValueError(f"max_bucket ({max_bucket}) must be >= 2")
-        pop = banded_new.select("band", "bh")
-        if banded_old is not None:
-            pop = pop.unionByName(banded_old.select("band", "bh"))
-        keep = (
-            pop.groupBy("band", "bh").count()
-            .where(F.col("count") <= max_bucket)
-            .select("band", "bh")
-        )
-        banded_new = banded_new.join(keep, ["band", "bh"], "left_semi")
-        if banded_old is not None:
-            banded_old = banded_old.join(keep, ["band", "bh"], "left_semi")
-
-    def _pair(a: DataFrame, b: DataFrame, ordered: bool) -> DataFrame:
-        aj, bj = a.alias("a"), b.alias("b")
-        cond = (F.col("a.band") == F.col("b.band")) & (
-            F.col("a.bh") == F.col("b.bh")
-        )
-        ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-        if ordered:
-            cond = cond & (ida < idb)
-            sel = [ida.alias("id_a"), idb.alias("id_b")]
-        else:
-            # new-vs-indexed: sides are disjoint sets, canonicalize order
-            cond = cond & (ida != idb)
-            sel = [F.least(ida, idb).alias("id_a"),
-                   F.greatest(ida, idb).alias("id_b")]
-        return aj.join(bj, cond).select(*sel)
-
-    cand = _pair(banded_new, banded_new, ordered=True)
-    if banded_old is not None:
-        cand = cand.unionByName(_pair(banded_new, banded_old, ordered=False))
     # signature lookup for verification = the full chain incl. this batch
-    sig_lookup = catalog.read(table, as_of=snap_id)
-    cand = (
-        cand.dropDuplicates(["id_a", "id_b"])
-        .join(sig_lookup.select(F.col(id_col).alias("id_a"),
-                                F.col("sig").alias("sig_a")), "id_a")
-        .join(sig_lookup.select(F.col(id_col).alias("id_b"),
-                                F.col("sig").alias("sig_b")), "id_b")
-    )
-    pairs = (
-        cand.withColumn("est_jaccard", est_jaccard(n_perm))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-    return pairs, snap_id
+    sigs = catalog.read(table, as_of=snap_id)
+    return _jaccard_pairs(cand, sigs, id_col, n_perm, threshold), snap_id
 
 
 def simhash_new_batch(
@@ -268,11 +248,10 @@ def simhash_new_batch(
     trick), so only ``ngram_bytes`` is the index identity and
     ``max_hamming`` can vary per call (keep it constant across batches
     for the union-equals-full-recompute invariant, which is pinned in
-    pytest). Retry (``batch_id``) and re-ingest (id anti-join)
-    semantics are exactly :func:`dedup_new_batch`'s. Uncapped, each
-    batch's pairs are EXACT for its frontier (the pigeonhole argument
-    is per-pair), so the union over batches equals
-    :func:`~lyssandra_spark.operators.dedup.simhash_neardup_pairs`
+    pytest). ``batch_id`` retry and re-ingest semantics: see the module
+    docstring. Uncapped, each batch's pairs are EXACT for its frontier
+    (the pigeonhole argument is per-pair), so the union over batches
+    equals :func:`~lyssandra_spark.operators.dedup.simhash_neardup_pairs`
     over the full corpus — each unordered pair emitted once, by the
     batch that indexed the later doc.
 
@@ -283,42 +262,13 @@ def simhash_new_batch(
     """
     params = {"ngram_bytes": ngram_bytes, "id_col": id_col,
               "text_col": text_col}
-    prior = catalog.snapshots(table)
-    replay, replay_as_of = _index_batch_state(
-        catalog, table, prior, params, "simhash_params", batch_id
+    cand, snap_id = _signed_batch(
+        catalog, table, new_docs, id_col, "simhash_params", params, batch_id,
+        sign=lambda b: simhash(b, id_col, text_col, ngram_bytes),
+        band=lambda s: simhash_bands(s, id_col, "simhash", max_hamming),
+        keys=["ci", "cv"], max_bucket=max_bucket, carry=("simhash",),
     )
-    if replay is not None:
-        snap_id = replay["id"]
-        prior_as_of = replay_as_of
-    else:
-        prior_as_of = prior[-1]["id"] if prior else None
-        batch = new_docs.dropDuplicates([id_col])
-        if prior_as_of is not None:
-            indexed_ids = catalog.read(table, as_of=prior_as_of).select(id_col)
-            batch = batch.join(indexed_ids, id_col, "left_anti")
-        sh_new = simhash(batch, id_col, text_col, ngram_bytes)
-        meta = {"simhash_params": params}
-        if batch_id is not None:
-            meta["batch_id"] = batch_id
-        snap_id = catalog.write(
-            sh_new, table, mode="append" if prior else "overwrite", meta=meta,
-        )
-    new = catalog.read_snapshot(table, snap_id)
-    banded_new = simhash_bands(new, id_col, "simhash", max_hamming)
-    banded_old = None
-    if prior_as_of is not None:
-        old = catalog.read(table, as_of=prior_as_of)
-        banded_old = simhash_bands(old, id_col, "simhash", max_hamming)
-    cand = _banded_batch_pairs(
-        banded_new, banded_old, ["ci", "cv"], id_col, max_bucket,
-        carry=["simhash"],
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    ), snap_id
+    return _hamming_pairs(cand, max_hamming), snap_id
 
 
 def embneardup_new_batch(
@@ -351,170 +301,33 @@ def embneardup_new_batch(
     bucket space, so those are the manifest-validated index params;
     ``min_cosine`` is a per-call verification threshold (constant
     across batches for the union-equals-full invariant, as with
-    ``threshold`` in :func:`dedup_new_batch`). Retry and re-ingest
-    semantics are identical to the other generators. At 100 TB the
+    ``threshold`` in :func:`dedup_new_batch`). A vector whose width !=
+    ``dim`` fails the append ("width != dim"). ``batch_id`` retry and
+    re-ingest semantics: see the module docstring. At 100 TB the
     historical corpus is never re-projected: per batch, one GEMM-or-
     expression bucket pass over the new shard, one append, keyed joins.
     """
-    import numpy as np
-
     from lyssandra_spark.operators.similarity import hyperplane_bucket_arrays
 
     if n_tables < 1:
         raise ValueError(f"n_tables ({n_tables}) must be >= 1")
     params = {"dim": dim, "n_planes": n_planes, "n_tables": n_tables,
               "seed": seed, "id_col": id_col, "emb_col": emb_col}
-    prior = catalog.snapshots(table)
-    replay, replay_as_of = _index_batch_state(
-        catalog, table, prior, params, "emblsh_params", batch_id
-    )
-    if replay is not None:
-        snap_id = replay["id"]
-        prior_as_of = replay_as_of
-    else:
-        prior_as_of = prior[-1]["id"] if prior else None
-        # in-plan width assert: a vector whose length != dim would
-        # null-pad zip_with on the literal bucket path and silently
-        # degrade recall (bits fold to 0 through NULL dots) — fail
-        # loudly instead. assert_true rides ON the emb column so column
-        # pruning can never drop the check, and it costs no extra job.
-        emb_checked = F.when(
-            F.assert_true(
-                F.size(F.col(emb_col).cast("array<double>")) == dim,
-                F.concat(
-                    F.lit(f"embedding width != dim ({dim}) for "
-                          f"{id_col}="),
-                    F.col(id_col).cast("string"),
-                ),
-            ).isNull(),
-            F.col(emb_col).cast("array<double>"),
-        )
-        batch = new_vecs.dropDuplicates([id_col]).select(
-            id_col, emb_checked.alias("emb")
-        )
-        if prior_as_of is not None:
-            indexed_ids = catalog.read(table, as_of=prior_as_of).select(id_col)
-            batch = batch.join(indexed_ids, id_col, "left_anti")
-        # same stacked draw as embedding_neardup_pairs: bit-identical
-        # buckets, so incremental and one-shot candidates coincide
-        planes = np.random.default_rng(seed).standard_normal(
-            (n_tables, n_planes, dim)
-        )
-        tagged = hyperplane_bucket_arrays(batch, planes, "emb",
-                                          keep=[id_col, "emb"])
-        meta = {"emblsh_params": params}
-        if batch_id is not None:
-            meta["batch_id"] = batch_id
-        snap_id = catalog.write(
-            tagged, table, mode="append" if prior else "overwrite", meta=meta,
-        )
-
-    def band(df):
-        return df.select(
-            id_col, F.posexplode("buckets").alias("tbl", "bucket")
-        )
-
-    new = catalog.read_snapshot(table, snap_id)
-    banded_new = band(new)
-    banded_old = None
-    if prior_as_of is not None:
-        banded_old = band(catalog.read(table, as_of=prior_as_of))
-    cand = _banded_batch_pairs(
-        banded_new, banded_old, ["tbl", "bucket"], id_col, max_bucket,
+    # same stacked draw as embedding_neardup_pairs: bit-identical
+    # buckets, so incremental and one-shot candidates coincide
+    planes = np.random.default_rng(seed).standard_normal((n_tables, n_planes, dim))
+    cand, snap_id = _signed_batch(
+        catalog, table, new_vecs, id_col, "emblsh_params", params, batch_id,
+        sign=lambda b: hyperplane_bucket_arrays(
+            _checked_embeddings(b, id_col, emb_col, dim), planes, "emb",
+            keep=[id_col, "emb"]),
+        band=lambda s: s.select(
+            id_col, F.posexplode("buckets").alias("tbl", "bucket")),
+        keys=["tbl", "bucket"], max_bucket=max_bucket,
     )
     # embedding lookup for verification = the full chain incl. this batch
-    emb_lookup = catalog.read(table, as_of=snap_id).select(
-        id_col, F.col("emb")
-    )
-    cand = (
-        cand.join(emb_lookup.select(F.col(id_col).alias("id_a"),
-                                    F.col("emb").alias("emb_a")), "id_a")
-        .join(emb_lookup.select(F.col(id_col).alias("id_b"),
-                                F.col("emb").alias("emb_b")), "id_b")
-    )
-    dotp = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x * y), F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return (
-        cand.select(
-            "id_a", "id_b",
-            (dotp / (nrm("emb_a") * nrm("emb_b"))).alias("cosine"),
-        )
-        .where(F.col("cosine") >= min_cosine)
-    ), snap_id
-
-
-def _banded_batch_pairs(
-    banded_new: DataFrame,
-    banded_old: DataFrame | None,
-    keys: list[str],
-    id_col: str,
-    max_bucket: int | None,
-    carry: list[str] | None = None,
-) -> DataFrame:
-    """new-vs-new (ordered) plus new-vs-indexed (canonicalized) bucket
-    joins with the combined-population cap — the shared candidate layer
-    of the three incremental generators. ``carry`` names per-row columns
-    to ride along as ``<c>_a``/``<c>_b`` shorthand (e.g. the simhash for
-    in-join verification); deduped on (id_a, id_b)."""
-    carry = carry or []
-    if max_bucket is not None:
-        if max_bucket < 2:
-            raise ValueError(f"max_bucket ({max_bucket}) must be >= 2")
-        pop = banded_new.select(*keys)
-        if banded_old is not None:
-            pop = pop.unionByName(banded_old.select(*keys))
-        keep = (
-            pop.groupBy(*keys).count()
-            .where(F.col("count") <= max_bucket)
-            .select(*keys)
-        )
-        banded_new = banded_new.join(keep, keys, "left_semi")
-        if banded_old is not None:
-            banded_old = banded_old.join(keep, keys, "left_semi")
-
-    def _pair(a: DataFrame, b: DataFrame, ordered: bool) -> DataFrame:
-        aj, bj = a.alias("a"), b.alias("b")
-        cond = None
-        for kcol in keys:
-            c = F.col(f"a.{kcol}") == F.col(f"b.{kcol}")
-            cond = c if cond is None else cond & c
-        ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-        if ordered:
-            cond = cond & (ida < idb)
-            sel = [ida.alias("id_a"), idb.alias("id_b")]
-            sel += [F.col(f"a.{c}").alias(_short(c, "a")) for c in carry]
-            sel += [F.col(f"b.{c}").alias(_short(c, "b")) for c in carry]
-        else:
-            cond = cond & (ida != idb)
-            sel = [F.least(ida, idb).alias("id_a"),
-                   F.greatest(ida, idb).alias("id_b")]
-            # carry columns follow the canonical order
-            sel += [
-                F.when(ida < idb, F.col(f"a.{c}")).otherwise(F.col(f"b.{c}"))
-                .alias(_short(c, "a"))
-                for c in carry
-            ]
-            sel += [
-                F.when(ida < idb, F.col(f"b.{c}")).otherwise(F.col(f"a.{c}"))
-                .alias(_short(c, "b"))
-                for c in carry
-            ]
-        return aj.join(bj, cond).select(*sel)
-
-    cand = _pair(banded_new, banded_new, ordered=True)
-    if banded_old is not None:
-        cand = cand.unionByName(_pair(banded_new, banded_old, ordered=False))
-    return cand.dropDuplicates(["id_a", "id_b"])
-
-
-def _short(col: str, side: str) -> str:
-    """simhash -> sh_a / sh_b; anything else -> <col>_a / <col>_b."""
-    return ("sh" if col == "simhash" else col) + "_" + side
+    embs = catalog.read(table, as_of=snap_id)
+    return _cosine_pairs(cand, embs, id_col, min_cosine), snap_id
 
 
 def update_components(

@@ -193,67 +193,23 @@ def hyperplane_buckets(
 
     ``planes`` is (n_tables, n_planes, dim). The one-scan shape replaces
     the union-of-tagged-scans pattern, which reads the corpus n_tables
-    times — at 10^12 rows that multiplier IS the job cost. Two paths:
+    times — at 10^12 rows that multiplier IS the job cost. This is
+    :func:`hyperplane_bucket_arrays` (in-plan expressions under the
+    literal budget, one broadcast GEMM per Arrow batch beyond it)
+    followed by a JVM ``posexplode``: the Arrow path sends n rows back
+    across the Python boundary, not n * n_tables copies of the carried
+    columns.
 
-    - in-plan expressions + posexplode when the total literal budget
-      (n_tables * n_planes * dim) is small — bit-exact with the
-      historical per-table expressions (same rng stream, same
-      bucket = bucket*2 + (dot>0) packing);
-    - broadcast mapInArrow beyond: one GEMM per Arrow batch against all
-      tables' planes at once, plan size O(1) in the plane budget (the
-      same de-literalization as IVF's assign_cells_arrow).
-
-    ``keep`` restricts the carried input columns (the Arrow path pays
-    serialization per output column; candidate generation usually only
-    needs the id).
+    ``keep`` restricts the carried input columns (candidate generation
+    usually only needs the id).
     """
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    n_tables, n_planes, dim = planes.shape
     keep = list(df.columns) if keep is None else list(keep)
-    if n_tables * n_planes * dim <= max_expr_literals:
-        arr = F.array(*[_plane_bucket(F.col(emb_col), planes[t])
-                        for t in range(n_tables)])
-        return df.select(*keep, F.posexplode(arr).alias(tbl_col, bucket_col))
-
-    src = df.select(*dict.fromkeys(keep + [emb_col]))  # emb needed to hash
-    emb_pos = src.columns.index(emb_col)
-    keep_pos = [src.columns.index(c) for c in keep]
-    bc = src.sparkSession.sparkContext.broadcast(
-        np.ascontiguousarray(planes.reshape(n_tables * n_planes, dim))
+    arrays = hyperplane_bucket_arrays(df, planes, emb_col, keep=keep,
+                                      out_col="__buckets",
+                                      max_expr_literals=max_expr_literals)
+    return arrays.select(
+        *keep, F.posexplode("__buckets").alias(tbl_col, bucket_col)
     )
-    out_schema = T.StructType(
-        [src.schema[c] for c in keep]
-        + [T.StructField(tbl_col, T.IntegerType(), False),
-           T.StructField(bucket_col, T.LongType(), False)]
-    )
-    # plane p contributes bit (n_planes-1-p): the expression path packs
-    # MSB-first via bucket = bucket*2 + bit
-    weights = (np.int64(1) << np.arange(n_planes - 1, -1, -1)).astype(np.int64)
-
-    def gen(it):
-        PL = bc.value
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            flat = batch.column(emb_pos).flatten().to_numpy(zero_copy_only=False)
-            X = flat.reshape(n, -1)
-            bits = (X @ PL.T > 0).reshape(n, n_tables, n_planes)
-            buckets = (bits.astype(np.int64) * weights).sum(-1)  # (n, n_tables)
-            idx = pa.array(np.repeat(np.arange(n, dtype=np.int64), n_tables))
-            cols = [batch.column(j).take(idx) for j in keep_pos]
-            yield pa.RecordBatch.from_arrays(
-                cols + [
-                    pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n),
-                             pa.int32()),
-                    pa.array(buckets.reshape(-1), pa.int64()),
-                ],
-                names=[f.name for f in out_schema.fields],
-            )
-
-    return src.mapInArrow(gen, out_schema)
 
 
 def hyperplane_bucket_arrays(
@@ -263,15 +219,19 @@ def hyperplane_bucket_arrays(
     max_expr_literals: int = 4096,
 ) -> DataFrame:
     """Append ONE ``array<long>`` column holding every table's sign-
-    sketch bucket — the per-ROW form of :func:`hyperplane_buckets`, for
-    PERSISTING alongside the vector: the exploded (row, table) form
-    would duplicate the embedding ``n_tables`` times in storage, while
-    banding this array back out is a pure-JVM ``posexplode`` projection
-    over the parquet scan (the ``band_signatures`` trick). Bucket values
-    are bit-identical to :func:`hyperplane_buckets` (same rng stream,
-    same MSB-first packing); the same two paths apply — in-plan
-    expressions under the literal budget, broadcast mapInArrow GEMM
-    beyond it.
+    sketch bucket — the per-ROW form :func:`hyperplane_buckets` explodes,
+    and the form to PERSIST alongside the vector: the exploded (row,
+    table) form would duplicate the embedding ``n_tables`` times in
+    storage, while banding this array back out is a pure-JVM
+    ``posexplode`` projection over the parquet scan (the
+    ``band_signatures`` trick). Two paths with bit-identical buckets
+    (same rng stream, MSB-first ``bucket*2 + (dot>0)`` packing):
+
+    - in-plan expressions when the total literal budget
+      (n_tables * n_planes * dim) is small;
+    - broadcast mapInArrow beyond: one GEMM per Arrow batch against all
+      tables' planes at once, plan size O(1) in the plane budget (the
+      same de-literalization as IVF's assign_cells_arrow).
     """
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -293,6 +253,8 @@ def hyperplane_bucket_arrays(
         [src.schema[c] for c in keep]
         + [T.StructField(out_col, T.ArrayType(T.LongType()), False)]
     )
+    # plane p contributes bit (n_planes-1-p): the expression path packs
+    # MSB-first via bucket = bucket*2 + bit
     weights = (np.int64(1) << np.arange(n_planes - 1, -1, -1)).astype(np.int64)
 
     def gen(it):

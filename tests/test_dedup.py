@@ -262,6 +262,33 @@ def test_embedding_neardup_multitable_recall_perturbed(spark, sf_dir):
     assert np.allclose(hits.cosine, target, atol=1e-6)
 
 
+@pytest.mark.parametrize("n_planes,n_tables", [
+    (16, 1),   # 16 * 64 plane literals: in-plan zip_with
+    (12, 8),   # 12 * 8 * 64 > 4096: broadcast GEMM
+], ids=["expression", "arrow"])
+def test_embedding_neardup_rejects_wrong_width(spark, sf_dir, n_planes,
+                                               n_tables):
+    """A vector whose width != dim must fail the job on both bucket
+    paths: the expression path would null-pad zip_with (the NULL dot
+    folds to bucket bit 0 and the call returns pairs), the Arrow path
+    would die in an opaque numpy matmul."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    ).limit(40)
+    bad = e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 2 == 0, F.slice("embedding", 1, 32))
+        .otherwise(F.col("embedding")),
+    )
+    with pytest.raises((Py4JJavaError, SparkRuntimeException),
+                       match="width != dim"):
+        DD.embedding_neardup_pairs(bad, dim=64, n_planes=n_planes,
+                                   n_tables=n_tables).collect()
+
+
 def test_max_bucket_caps_quadratic_blowup(spark, sf_dir):
     """200 identical boilerplate docs share every band bucket: uncapped,
     candidate generation emits 200*199/2 = 19,900 pairs from the

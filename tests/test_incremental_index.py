@@ -212,3 +212,87 @@ def test_index_identity_includes_feature_columns(
     with pytest.raises((Py4JJavaError, SparkRuntimeException),
                        match="width != dim"):
         embneardup_new_batch(cat4, "el", bad, dim=64, n_planes=8)
+
+
+@pytest.fixture(scope="module")
+def boiler_docs(spark, sf_dir):
+    """40 real docs + tweaked near-dups of every 5th + 120 identical
+    boilerplate docs that share every band / chunk bucket."""
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text").limit(40)
+    near = (
+        d.where(F.col("doc_id") % 5 == 0)
+        .withColumn("doc_id", F.col("doc_id") + 500000)
+        .withColumn("text", F.concat(F.col("text"), F.lit(" tail tweak")))
+    )
+    boiler = spark.range(120).select(
+        (F.col("id") + 900000).alias("doc_id"),
+        F.lit("the same legal boilerplate text repeated everywhere in "
+              "the corpus for every single document again and again"
+              ).alias("text"),
+    )
+    return d.unionByName(near).unionByName(boiler).cache()
+
+
+@pytest.fixture(scope="module")
+def boiler_vecs(spark, sf_dir):
+    """40 real vectors + scaled copies of every 5th + 120 identical
+    vectors that share every (table, bucket)."""
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    ).limit(40)
+    near = (
+        e.where(F.col("vec_id") % 5 == 0)
+        .withColumn("vec_id", F.col("vec_id") + 500000)
+        .withColumn("embedding",
+                    F.transform("embedding", lambda x: x * F.lit(1.001)))
+    )
+    boiler = spark.range(120).select(
+        (F.col("id") + 900000).alias("vec_id"),
+        F.array_repeat(F.lit(1.0), 64).alias("embedding"),
+    )
+    return e.unionByName(near).unionByName(boiler).cache()
+
+
+_FAMILIES = {
+    "minhash": (dedup_new_batch, DD.minhash_lsh_pairs, "boiler_docs",
+                dict(n_perm=32, bands=8, threshold=0.4)),
+    "simhash": (simhash_new_batch,
+                lambda df, max_bucket=None, **kw: DD.simhash_pairs_from_hashes(
+                    DD.simhash(df, ngram_bytes=kw["ngram_bytes"]),
+                    max_hamming=kw["max_hamming"], max_bucket=max_bucket),
+                "boiler_docs", dict(max_hamming=3, ngram_bytes=4)),
+    "emblsh": (embneardup_new_batch, DD.embedding_neardup_pairs,
+               "boiler_vecs", dict(dim=64, n_planes=8, n_tables=3,
+                                   min_cosine=0.99)),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_new_batch_max_bucket_matches_one_shot(
+    spark, request, tmp_path_factory, family
+):
+    """A capped bootstrap batch returns exactly the capped one-shot
+    generator's pairs (the boilerplate's giant buckets are dropped, the
+    planted near-dups survive), and ``max_bucket=1`` is rejected by
+    every entry point that takes it — by the batch generator before
+    anything is appended."""
+    new_batch, one_shot, fixture, kw = _FAMILIES[family]
+    df = request.getfixturevalue(fixture)
+    cat = ParquetCatalog(spark, str(tmp_path_factory.mktemp(f"cap_{family}")))
+
+    pairs, _ = new_batch(cat, "idx", df, max_bucket=50, **kw)
+    got = pairs.toPandas()
+    want = one_shot(df, max_bucket=50, **kw).toPandas()
+    assert list(got.columns) == list(want.columns)
+    assert len(got) and set(map(tuple, got.values)) == set(
+        map(tuple, want.values))
+    assert not got.duplicated(["id_a", "id_b"]).any()
+    assert (got.id_b < 900000).all()  # no boilerplate bucket survives
+
+    with pytest.raises(ValueError, match="max_bucket"):
+        one_shot(df, max_bucket=1, **kw)
+    fresh = ParquetCatalog(spark, str(tmp_path_factory.mktemp(f"cap1_{family}")))
+    with pytest.raises(ValueError, match="max_bucket"):
+        new_batch(fresh, "idx", df, max_bucket=1, **kw)
+    assert fresh.snapshots("idx") == []
